@@ -49,7 +49,9 @@ def main() -> int:
         for n, fn in entry_mod.extra_queries().items():
             queries.setdefault(n, fn)
 
-    ui = "http://localhost:4049/api/v1"
+    # the UI binds the next free port when 4049 is taken; ask the
+    # session where it actually landed
+    ui = f"{spark.sparkContext.uiWebUrl}/api/v1"
     app_id = spark.sparkContext.applicationId
 
     def stages() -> list[dict]:

@@ -7,9 +7,13 @@ program with a DuckDB-portable formulation:
   hash, map-side combinable. The 100 TB workhorse.
 - **MinHash + LSH**: word-shingle → per-permutation min hash → banded
   bucket join. Candidate generation cost is O(docs · bands), pair
-  explosion bounded by bucket sizes (skew-salt hot buckets at scale).
+  explosion bounded by bucket sizes (``max_bucket_size`` drops hot
+  buckets at scale).
 - **n-gram Jaccard**: exact verification on candidate pairs via a
-  shingle-equijoin (never all-pairs).
+  shingle-equijoin (never all-pairs). Every candidate generator
+  (LSH, AllPairs prefixes, cross-corpus bands, the incremental index)
+  verifies through ONE routine, :func:`verify_jaccard`, over ONE
+  per-doc set convention, :func:`shingle_sets`.
 - **SimHash**: 28-bit sign-sum fingerprint; hamming-distance
   verification over band-blocked candidates.
 - **embedding cosine** near-dup: see ``similarity.py``.
@@ -110,46 +114,28 @@ def containment_pairs(
     corpus-internal counterpart of :func:`ngram_containment` (which
     scores docs against a BENCHMARK's broadcast shingle set).
 
-    Plan: identical to the Jaccard posting-list path — per-doc set
-    sizes ride every posting entry (:func:`_bucket_pairs_carrying_n`,
-    the AllPairs pattern), so after pair expansion there is ONE
-    combinable aggregate, zero joins, zero broadcasts; the
+    Plan: the pair counts ARE the Jaccard posting-list path's
+    (:func:`ngram_jaccard_pairs` with ``candidates=None``) — per-doc
+    set sizes ride every posting entry, so after pair expansion there
+    is ONE combinable aggregate, zero joins, zero broadcasts; the
     containment denominator is ``least(n_a, n_b)`` read off the pair
-    row, one IEEE division of exact integers. ``max_doc_freq`` caps
+    row, one IEEE division of exact integers (the unused ``jaccard``
+    column is pruned from the plan). ``max_doc_freq`` caps
     hot-shingle pair expansion exactly as in the Jaccard form (capped
     semantics mirror in the oracle); at corpus scale set it
     (:data:`SCALE_MAX_DOC_FREQ`).
     """
-    doc_sets = (
-        word_shingles(df, text_col, k, distinct=False)
-        .select("doc_id", _h56(F.col("shingle")).alias("h"))
-        .groupBy("doc_id")
-        .agg(F.collect_set("h").alias("hs"))
-    )
-    entries = doc_sets.select(
-        "doc_id", F.size("hs").alias("n_sh"), F.explode("hs").alias("h")
-    )
-    posting = entries.groupBy("h").agg(
-        F.collect_list(
-            F.struct(F.col("doc_id").alias("id"), F.col("n_sh").alias("n"))
-        ).alias("ids")
-    )
-    if max_doc_freq is not None:
-        posting = posting.filter(F.size("ids") <= max_doc_freq)
-    out = (
-        _bucket_pairs_carrying_n(posting)
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count(F.lit(1)).alias("n_inter"),
-            F.max("_na").alias("n_a"),
-            F.max("_nb").alias("n_b"),
-        )
-        .withColumn(
-            "containment",
-            F.col("n_inter").cast("double")
-            / F.least("n_a", "n_b").cast("double"),
-        )
-        .select("doc_a", "doc_b", "n_inter", "n_a", "n_b", "containment")
+    out = ngram_jaccard_pairs(
+        df, text_col, k, max_doc_freq=max_doc_freq
+    ).select(
+        "doc_a",
+        "doc_b",
+        "n_inter",
+        "n_a",
+        "n_b",
+        (
+            F.col("n_inter").cast("double") / F.least("n_a", "n_b").cast("double")
+        ).alias("containment"),
     )
     if threshold > 0:
         out = out.filter(F.col("containment") >= F.lit(threshold))
@@ -419,6 +405,73 @@ def word_shingles(
     return out.distinct() if distinct else out
 
 
+def shingle_sets(df: DataFrame, text_col: str = "text", k: int = 3) -> DataFrame:
+    """(doc_id, sh_set): each doc's distinct 56-bit word k-gram hashes
+    (:func:`.hashing.h56`) — the one set every exact-overlap operator
+    here counts on (Jaccard, containment, decontamination, the
+    incremental index), so they agree with each other and with the
+    oracle's hashing. The set is built by one map-side-combined
+    ``groupBy(doc_id).collect_set``: the exploded shingle stream never
+    shuffles at full width, and ``size(sh_set)`` is the exact set size.
+    """
+    return (
+        word_shingles(df, text_col, k, distinct=False)
+        .select("doc_id", _h56(F.col("shingle")).alias("h"))
+        .groupBy("doc_id")
+        .agg(F.collect_set("h").alias("sh_set"))
+    )
+
+
+def _jaccard_scored(counts: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, n_inter, n_a, n_b) pair counts → the same plus
+    ``jaccard = |∩| / (|A|+|B|−|∩|)`` (one IEEE division of exact
+    integers), keeping pairs at or above ``threshold`` (0 keeps all)."""
+    out = counts.withColumn(
+        "jaccard",
+        F.col("n_inter").cast("double")
+        / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
+    ).select("doc_a", "doc_b", "n_inter", "n_a", "n_b", "jaccard")
+    if threshold > 0:
+        out = out.filter(F.col("jaccard") >= F.lit(threshold))
+    return out
+
+
+def verify_jaccard(
+    candidates: DataFrame,
+    sets_a: DataFrame,
+    sets_b: DataFrame,
+    threshold: float,
+) -> DataFrame:
+    """Exact-Jaccard verification of candidate pairs — the one verify
+    step shared by every candidate generator (LSH, AllPairs prefixes,
+    cross-corpus bands, the incremental index).
+
+    ``candidates``: (doc_a, doc_b). ``sets_a`` / ``sets_b``: the
+    :func:`shingle_sets` frames (doc_id, sh_set) holding the ``doc_a``
+    and ``doc_b`` docs (the same frame twice for a self-join).
+    |∩| is an ``array_intersect`` per pair, so the posting-list pair
+    explosion never happens; pairs sharing no shingle are dropped, as
+    the posting-list form never emits them. Join strategy is the
+    CALLER's: each passes its frames already hinted (DESIGN §4.23).
+    Emits (doc_a, doc_b, n_inter, n_a, n_b, jaccard).
+    """
+    a = sets_a.select(F.col("doc_id").alias("doc_a"), F.col("sh_set").alias("sa"))
+    b = sets_b.select(F.col("doc_id").alias("doc_b"), F.col("sh_set").alias("sb"))
+    counts = (
+        a.join(candidates, "doc_a")
+        .join(b, "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            F.size(F.array_intersect("sa", "sb")).alias("n_inter"),
+            F.size("sa").alias("n_a"),
+            F.size("sb").alias("n_b"),
+        )
+        .filter(F.col("n_inter") > 0)
+    )
+    return _jaccard_scored(counts, threshold)
+
+
 #: Double-hashing parameters: one md5 per shingle yields two 56-bit
 #: halves h1/h2 (14 hex digits each — exact in BIGINT in both
 #: engines); permutation i hashes to (h1 + i·h2) mod MH_PRIME.
@@ -444,98 +497,43 @@ SCALE_MAX_DOC_FREQ = 64
 SCALE_MAX_BUCKET_SIZE = 512
 
 
+def _minhash_hashed_shingles(df: DataFrame, text_col: str, k: int) -> DataFrame:
+    """(doc_id, h1, h2): the two 56-bit halves of each shingle's md5.
+    ``h1`` is :func:`.hashing.h56` — the :func:`shingle_sets` hash —
+    so one md5 per shingle can feed both a signature and a set.
+    Duplicate shingles are kept: they cannot change a min, and
+    skipping the distinct() skips a full-width shuffle of the 50×
+    exploded stream."""
+    md = F.md5(F.col("shingle"))
+    return word_shingles(df, text_col, k, distinct=False).select(
+        "doc_id",
+        _h56(F.col("shingle")).alias("h1"),
+        F.conv(F.substring(md, 17, 14), 16, 10).cast("long").alias("h2"),
+    )
+
+
+def _minhash_aggs(n_hashes: int) -> list[Column]:
+    """The ``mh_0..mh_{n-1}`` per-doc aggregates over
+    :func:`_minhash_hashed_shingles` rows: g_i(s) = (h1 + i·h2) mod P."""
+    return [
+        F.min((F.col("h1") + F.lit(i) * F.col("h2")) % F.lit(MH_PRIME)).alias(f"mh_{i}")
+        for i in range(n_hashes)
+    ]
+
+
 def minhash_signatures(
     df: DataFrame, text_col: str = "text", n_hashes: int = 12, k: int = 3
 ) -> DataFrame:
     """Per-doc MinHash signature via the classic double-hashing
     construction: g_i(s) = (h1(s) + i·h2(s)) mod P, one md5 per
     shingle instead of one per (shingle, permutation) — 12× fewer
-    hash evaluations. Output: doc_id, mh_0..mh_{n-1} (BIGINT).
+    hash evaluations. Output: doc_id, mh_0..mh_{n-1} (BIGINT). The
+    only shuffle is the map-side-combined groupBy.
     """
-    # duplicate shingles cannot change a min — skip the full-width
-    # distinct() shuffle of the 50× exploded stream; the only shuffle
-    # left in signature-building is the map-side-combined groupBy
-    sh = word_shingles(df, text_col, k, distinct=False)
-    md = F.md5(F.col("shingle"))
-    h1 = F.conv(F.substring(md, 1, 14), 16, 10).cast("long")
-    h2 = F.conv(F.substring(md, 17, 14), 16, 10).cast("long")
-    hashed = sh.select("doc_id", h1.alias("h1"), h2.alias("h2"))
-    aggs = [
-        F.min((F.col("h1") + F.lit(i) * F.col("h2")) % F.lit(MH_PRIME)).alias(f"mh_{i}")
-        for i in range(n_hashes)
-    ]
-    return hashed.groupBy("doc_id").agg(*aggs)
-
-
-def _salted_chunk_rows(
-    grouped: DataFrame, id_list_col: str = "ids", chunk: int = 256
-) -> DataFrame:
-    """The salted pre-expansion layout: each bucket's sorted id array
-    split into ⌈b/c⌉ ordered chunks, one ROW per chunk pair (i ≤ j,
-    ``same`` marks i == j). Exposed separately from
-    :func:`_bucket_pairs_salted` so the per-task work bound — every
-    row carries ≤ ``chunk`` ids per side, i.e. ≤ c² pair work — is
-    directly assertable in tests.
-    """
-    ids = F.array_sort(F.col(id_list_col))
-    n_chunks = F.ceil(F.size(ids) / F.lit(chunk)).cast("int")
-    chunks = F.transform(
-        F.sequence(F.lit(0), n_chunks - F.lit(1)),
-        lambda i: F.slice(ids, i * chunk + F.lit(1), F.lit(chunk)),
-    )
-    # (chunk_i, chunk_j) with i <= j; i == j marks intra-chunk rows
-    chunk_pairs = F.flatten(
-        F.transform(
-            chunks,
-            lambda ca, i: F.transform(
-                F.slice(chunks, i + F.lit(1), F.size(chunks)),
-                lambda cb, j: F.struct(
-                    ca.alias("a"), cb.alias("b"), (j == 0).alias("same")
-                ),
-            ),
-        )
-    )
     return (
-        grouped.filter(F.size(id_list_col) > 1)
-        .select(F.explode(chunk_pairs).alias("cp"))
-        .select(F.col("cp.a").alias("a"), F.col("cp.b").alias("b"), F.col("cp.same").alias("same"))
-    )
-
-
-def _bucket_pairs_salted(
-    grouped: DataFrame, id_list_col: str = "ids", chunk: int = 256
-) -> DataFrame:
-    """Skew-salted variant of :func:`_bucket_pairs`: a bucket of b ids
-    emits b²/2 pairs — in the plain form that is ONE task row doing
-    O(b²) work (a straggler for boilerplate-heavy buckets). Here the
-    sorted id array is split into ⌈b/c⌉ chunks and each chunk *pair*
-    becomes its own row before cross-expansion, so a hot bucket's work
-    spreads over (b/c)²/2 parallel rows. Chunks are ordered slices of
-    the sorted array, so cross-chunk pairs satisfy a < b by
-    construction. Same output as :func:`_bucket_pairs`.
-    """
-    rows = _salted_chunk_rows(grouped, id_list_col, chunk)
-    a = F.col("a")
-    intra = F.flatten(
-        F.transform(
-            a,
-            lambda x, i: F.transform(
-                F.slice(a, i + F.lit(2), F.size(a)),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
-    cross = F.flatten(
-        F.transform(
-            a,
-            lambda x: F.transform(
-                F.col("b"), lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b"))
-            ),
-        )
-    )
-    return (
-        rows.select(F.explode(F.when(F.col("same"), intra).otherwise(cross)).alias("p"))
-        .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
+        _minhash_hashed_shingles(df, text_col, k)
+        .groupBy("doc_id")
+        .agg(*_minhash_aggs(n_hashes))
     )
 
 
@@ -546,7 +544,6 @@ def minhash_lsh_candidates(
     band_size: int = 3,
     k: int = 3,
     max_bucket_size: int | None = None,
-    salt_chunk: int | None = None,
 ) -> DataFrame:
     """LSH candidate pairs: band the signature (n_hashes/band_size
     bands), bucket-join docs sharing any band key, emit distinct
@@ -558,13 +555,10 @@ def minhash_lsh_candidates(
     signature lineage. ``max_bucket_size`` drops hot buckets
     (boilerplate-heavy corpora ⇒ power-law bucket sizes; a bucket of
     b docs emits b²/2 pairs) — the standard skew guard at corpus
-    scale; ``None`` keeps exact reference semantics. ``salt_chunk``
-    instead *keeps* hot buckets but spreads their pair expansion over
-    (b/chunk)² rows (:func:`_bucket_pairs_salted`) — same output,
-    no stragglers.
+    scale; ``None`` keeps exact reference semantics.
     """
     sig = minhash_signatures(df, text_col, n_hashes, k)
-    return _banded_candidates(sig, n_hashes, band_size, max_bucket_size, salt_chunk)
+    return _banded_candidates(sig, n_hashes, band_size, max_bucket_size)
 
 
 def band_rows(sig: DataFrame, n_hashes: int, band_size: int) -> DataFrame:
@@ -593,7 +587,6 @@ def _banded_candidates(
     n_hashes: int,
     band_size: int,
     max_bucket_size: int | None = None,
-    salt_chunk: int | None = None,
 ) -> DataFrame:
     banded = band_rows(sig, n_hashes, band_size)
     buckets = banded.groupBy("band_idx", "band_key").agg(
@@ -601,8 +594,6 @@ def _banded_candidates(
     )
     if max_bucket_size is not None:
         buckets = buckets.filter(F.size("ids") <= max_bucket_size)
-    if salt_chunk is not None:
-        return _bucket_pairs_salted(buckets, chunk=salt_chunk).distinct()
     return _bucket_pairs(buckets).distinct()
 
 
@@ -618,7 +609,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.0,
     candidates: DataFrame | None = None,
     max_doc_freq: int | None = None,
-    broadcast_candidates: bool = False,
 ) -> DataFrame:
     """Exact Jaccard similarity over word k-gram shingle sets.
 
@@ -626,17 +616,6 @@ def ngram_jaccard_pairs(
     shingle) — never a cross join; optionally restricted to
     ``candidates`` (doc_a, doc_b), e.g. LSH output.
     Jaccard = |∩| / (|A|+|B|−|∩|).
-
-    ``broadcast_candidates`` defaults to ``False`` (r9, the sf10
-    decade's catch): LSH candidate sets are NOT bounded by
-    construction — per-bucket caps bound SKEW, but the total is
-    cap × n_buckets ∝ corpus size, and the forced broadcast OOM'd
-    ``neardup_components`` at 500k docs. False = every
-    candidate-side join is ``hint("merge")``-pinned and AQE
-    re-broadcasts from real sizes when small (identical results,
-    small-SF speed preserved). ``True`` remains for candidate sets
-    bounded by cardinality CLASS — a fixed query list, a small eval
-    corpus — per DESIGN §4.23.
 
     ``max_doc_freq`` drops shingles appearing in more than that many
     docs before pair expansion (a shingle shared by d docs emits d²/2
@@ -650,11 +629,9 @@ def ngram_jaccard_pairs(
     Plan shapes:
 
     - ``candidates=None`` (exact all-pairs-sharing-a-shingle): the
-      shingle stream is deduped per doc with one
-      ``groupBy(doc_id).collect_set(h)``; the set size ``n_sh`` is
-      read off the set scan-locally and the re-exploded (doc_id, h,
-      n_sh) rows build the postings, so EVERY POSTING ENTRY CARRIES
-      ITS DOC'S SIZE (the AllPairs pattern,
+      per-doc :func:`shingle_sets` give ``n_sh`` scan-locally and the
+      re-exploded (doc_id, h, n_sh) rows build the postings, so EVERY
+      POSTING ENTRY CARRIES ITS DOC'S SIZE (the AllPairs pattern,
       :func:`_bucket_pairs_carrying_n`). The Jaccard denominator then
       rides the pair stream — there is NO per-doc sizes table and NO
       join after pair expansion, hence nothing to broadcast. (The r8
@@ -665,141 +642,83 @@ def ngram_jaccard_pairs(
       then h) instead of once, the price of eliminating the
       post-expansion join entirely.
     - with ``candidates``: the corpus is semi-joined down to candidate
-      docs *before* shingling, then the candidate pairs broadcast-join
-      per-doc shingle sets and |∩| is an ``array_intersect`` — the
-      pair explosion (Σ_s d_s² over the full corpus) never happens.
-      Candidate doc sets are tiny by construction (LSH output), so
-      total work is O(candidate docs · shingles/doc). ``candidates``
-      is persisted here (it is consumed by three operators; without
-      pinning, its LSH lineage would recompute each time). This path
-      is always exact — ``max_doc_freq`` does not apply (there is no
-      posting-list expansion to cap).
+      docs *before* shingling, then :func:`verify_jaccard` joins the
+      candidate pairs to the per-doc shingle sets and |∩| is an
+      ``array_intersect`` — the pair explosion (Σ_s d_s² over the full
+      corpus) never happens. Total work is O(candidate docs ·
+      shingles/doc). ``candidates`` is persisted here (it is consumed
+      by three operators; without pinning, its LSH lineage would
+      recompute each time). This path is always exact —
+      ``max_doc_freq`` does not apply (there is no posting-list
+      expansion to cap).
     """
-    if candidates is not None:
+    if candidates is None:
+        # n_sh is read off each set BEFORE the doc-freq cap (sizes stay
+        # exact; the cap restricts only which shingles contribute to
+        # |∩|, mirroring the capped oracle). Sizes ride the pair stream
+        # (_na/_nb are functionally dependent on doc_a/doc_b, so max()
+        # under the count recovers them) — the plan after pair
+        # expansion is ONE combinable aggregate, zero joins, zero
+        # broadcasts (plan-asserted in tests/test_plans.py)
+        entries = shingle_sets(df, text_col, k).select(
+            "doc_id", F.size("sh_set").alias("n_sh"), F.explode("sh_set").alias("h")
+        )
+        posting = entries.groupBy("h").agg(
+            F.collect_list(
+                F.struct(F.col("doc_id").alias("id"), F.col("n_sh").alias("n"))
+            ).alias("ids")
+        )
         if max_doc_freq is not None:
-            # the candidate path has no posting-list expansion to cap;
-            # silently returning exact values for a caller who asked
-            # for capped semantics would be a behavior trap
-            raise ValueError(
-                "max_doc_freq only applies to the posting-list (candidates=None) "
-                "path; the candidate path is always exact"
+            posting = posting.filter(F.size("ids") <= max_doc_freq)
+        counts = (
+            _bucket_pairs_carrying_n(posting)
+            .groupBy("doc_a", "doc_b")
+            .agg(
+                F.count(F.lit(1)).alias("n_inter"),
+                F.max("_na").alias("n_a"),
+                F.max("_nb").alias("n_b"),
             )
-        # persisted because three operators consume it (cand_docs twice
-        # + the pair join); the registration lives as long as the
-        # plan — long-lived sessions invoking the pipeline repeatedly
-        # should clearCache() between invocations (bench.py does)
-        candidates = candidates.select("doc_a", "doc_b").persist()
-        cand_docs = (
-            candidates.select(F.col("doc_a").alias("doc_id"))
-            .union(candidates.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
         )
-        # broadcast discipline (DESIGN §4.23): the broadcast hint is
-        # only safe when the CANDIDATE SET is bounded by construction —
-        # true for banded-LSH output (bucket caps). Pass
-        # ``broadcast_candidates=False`` when the generator can emit a
-        # pair-stream-sized set (the AllPairs prefix filter at low
-        # thresholds on boilerplate-heavy corpora — the sf1 decade hit
-        # an 8 GB broadcast build there). Merely DROPPING the hint is
-        # not enough: the static planner's size estimate for the
-        # HOF-derived persisted candidate lineage is garbage-tiny, so
-        # it STILL picks BroadcastHashJoin and the build OOMs at sf1
-        # (r9 re-caught this in a fresh JVM — r8's 61 s pass sat just
-        # under the ceiling). ``hint("merge")`` pins the STATIC plan
-        # to a shuffle join; AQE then demotes to broadcast at runtime
-        # using REAL shuffle sizes whenever the set is actually small
-        # — fast at sf0.01, safe at any scale, results identical.
-        _b = F.broadcast if broadcast_candidates else (lambda d: d.hint("merge"))
-        # restrict BEFORE the shingle fan-out: only candidate docs pay
-        # the explode+distinct (the full-corpus fan-out already ran
-        # once, inside LSH candidate generation)
-        doc_sets = (
-            word_shingles(
-                df.join(_b(cand_docs), "doc_id", "left_semi"),
-                text_col, k, distinct=False,
-            )
-            .select("doc_id", _h56(F.col("shingle")).alias("h"))
-            .groupBy("doc_id")
-            .agg(F.collect_set("h").alias("sh_set"))
-        )
-        a = doc_sets.select(F.col("doc_id").alias("doc_a"), F.col("sh_set").alias("sa"))
-        b = doc_sets.select(F.col("doc_id").alias("doc_b"), F.col("sh_set").alias("sb"))
-        if not broadcast_candidates:
-            # doc_sets is ONE ROW PER CANDIDATE DOC — bounded only
-            # when the candidate set is (LSH bucket caps). With an
-            # unbounded generator the static planner still picks a
-            # broadcast build from the garbage HOF-lineage estimate
-            # (the r9 sf1 OOM shape); pin SMJ, let AQE re-broadcast
-            # from real sizes when the frame is actually small.
-            a = a.hint("merge")
-            b = b.hint("merge")
-        out = (
-            a.join(_b(candidates), "doc_a")
-            .join(b, "doc_b")
-            .select(
-                "doc_a",
-                "doc_b",
-                F.size(F.array_intersect("sa", "sb")).alias("n_inter"),
-                F.size("sa").alias("n_a"),
-                F.size("sb").alias("n_b"),
-            )
-            .filter(F.col("n_inter") > 0)  # posting-list form never emits 0-∩ pairs
-            .withColumn(
-                "jaccard",
-                F.col("n_inter").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
-            )
-            .select("doc_a", "doc_b", "n_inter", "n_a", "n_b", "jaccard")
-        )
-        if threshold > 0:
-            out = out.filter(F.col("jaccard") >= F.lit(threshold))
-        return out
-
-    # per-doc shingle sets: one groupBy(doc_id) dedups the multiset
-    # and yields n_sh for free; the re-explode preserves nothing we
-    # need (the next groupBy re-hashes on h anyway) but lets n_sh ride
-    # every (doc_id, h) row into the postings. n_sh is computed BEFORE
-    # the doc-freq cap (sizes stay exact; the cap restricts only which
-    # shingles contribute to |∩|, mirroring the capped oracle).
-    doc_sets = (
-        word_shingles(df, text_col, k, distinct=False)
-        .select("doc_id", _h56(F.col("shingle")).alias("h"))
-        .groupBy("doc_id")
-        .agg(F.collect_set("h").alias("hs"))
-    )
-    entries = doc_sets.select(
-        "doc_id", F.size("hs").alias("n_sh"), F.explode("hs").alias("h")
-    )
-    posting = entries.groupBy("h").agg(
-        F.collect_list(
-            F.struct(F.col("doc_id").alias("id"), F.col("n_sh").alias("n"))
-        ).alias("ids")
-    )
-    capped = posting
+        return _jaccard_scored(counts, threshold)
     if max_doc_freq is not None:
-        capped = capped.filter(F.size("ids") <= max_doc_freq)
-    # sizes ride the pair stream (_na/_nb are functionally dependent on
-    # doc_a/doc_b, so max() under the count recovers them) — the plan
-    # after pair expansion is ONE combinable aggregate, zero joins,
-    # zero broadcasts (plan-asserted in tests/test_plans.py)
-    out = (
-        _bucket_pairs_carrying_n(capped)
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count(F.lit(1)).alias("n_inter"),
-            F.max("_na").alias("n_a"),
-            F.max("_nb").alias("n_b"),
+        # the candidate path has no posting-list expansion to cap;
+        # silently returning exact values for a caller who asked
+        # for capped semantics would be a behavior trap
+        raise ValueError(
+            "max_doc_freq only applies to the posting-list (candidates=None) "
+            "path; the candidate path is always exact"
         )
-        .withColumn(
-            "jaccard",
-            F.col("n_inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
-        )
-        .select("doc_a", "doc_b", "n_inter", "n_a", "n_b", "jaccard")
+    # persisted because three operators consume it (cand_docs twice
+    # + the pair join); the registration lives as long as the
+    # plan — long-lived sessions invoking the pipeline repeatedly
+    # should clearCache() between invocations (bench.py does)
+    candidates = candidates.select("doc_a", "doc_b").persist()
+    cand_docs = (
+        candidates.select(F.col("doc_a").alias("doc_id"))
+        .union(candidates.select(F.col("doc_b").alias("doc_id")))
+        .distinct()
     )
-    if threshold > 0:
-        out = out.filter(F.col("jaccard") >= F.lit(threshold))
-    return out
+    # broadcast discipline (DESIGN §4.23): LSH candidate sets are NOT
+    # bounded by construction — per-bucket caps bound SKEW, but the
+    # total is cap × n_buckets ∝ corpus size (a forced broadcast
+    # OOM'd neardup_components at 500k docs), and the AllPairs prefix
+    # filter at low thresholds emits a pair-stream-sized set. Merely
+    # DROPPING the hint is not enough: the static planner's size
+    # estimate for the HOF-derived persisted candidate lineage (and
+    # for the per-candidate-doc sets built from it) is garbage-tiny,
+    # so it STILL picks BroadcastHashJoin and the build OOMs at sf1.
+    # ``hint("merge")`` pins every candidate-side join of the STATIC
+    # plan to a shuffle join; AQE then demotes to broadcast at runtime
+    # using REAL shuffle sizes whenever the set is actually small —
+    # fast at sf0.01, safe at any scale, results identical.
+    #
+    # restrict BEFORE the shingle fan-out: only candidate docs pay
+    # the explode+collect_set (the full-corpus fan-out already ran
+    # once, inside LSH candidate generation)
+    doc_sets = shingle_sets(
+        df.join(cand_docs.hint("merge"), "doc_id", "left_semi"), text_col, k
+    ).hint("merge")
+    return verify_jaccard(candidates.hint("merge"), doc_sets, doc_sets, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -1017,21 +936,14 @@ def ngram_containment(
     count. Never a corpus self-join.
     """
 
-    doc_sh = (
-        word_shingles(df, text_col, k, distinct=False)
-        .select("doc_id", _h56(F.col("shingle")).alias("h"))
-        .groupBy("doc_id")
-        .agg(F.collect_set("h").alias("hs"))
-        .select("doc_id", F.explode("hs").alias("h"))
+    doc_sh = shingle_sets(df, text_col, k).select(
+        "doc_id", F.explode("sh_set").alias("h")
     )
-    b_sets = (
-        word_shingles(benchmark, text_col, k, distinct=False)
-        .select(F.col("doc_id").alias("bench_id"), _h56(F.col("shingle")).alias("h"))
-        .groupBy("bench_id")
-        .agg(F.collect_set("h").alias("hs"))
+    b_sets = shingle_sets(benchmark, text_col, k).withColumnRenamed(
+        "doc_id", "bench_id"
     )
-    sizes = b_sets.select("bench_id", F.size("hs").cast("long").alias("n_bench"))
-    b_sh = b_sets.select("bench_id", F.explode("hs").alias("h"))
+    sizes = b_sets.select("bench_id", F.size("sh_set").cast("long").alias("n_bench"))
+    b_sh = b_sets.select("bench_id", F.explode("sh_set").alias("h"))
     common = (
         doc_sh.join(F.broadcast(b_sh), "h")
         .groupBy("doc_id", "bench_id")
@@ -1053,89 +965,6 @@ def ngram_containment(
 # ---------------------------------------------------------------------------
 # connected components (near-dup groups -> survivors)
 # ---------------------------------------------------------------------------
-
-
-def _edge_checksum(df: DataFrame, cols: tuple[str, str]) -> object:
-    """Type-agnostic one-row probe: sum of xxhash64 over the rows.
-    Equal sums across rounds ⇒ unchanged set up to a ~2^-64 collision
-    (the iteration is deterministic and monotone, so no oscillation).
-    decimal(38,0) accumulator — a plain long sum would overflow;
-    coalesce(0) keeps an empty set at a stable non-NULL checksum."""
-    a, b = cols
-    return df.agg(
-        F.coalesce(
-            F.sum(F.xxhash64(F.col(a), F.col(b)).cast("decimal(38,0)")),
-            F.lit(0).cast("decimal(38,0)"),
-        ).alias("s")
-    ).collect()[0]["s"]
-
-
-def _cc_star_labels(edges: DataFrame, max_iter: int) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14): the
-    O(log² n)-round alternative to min-label propagation for graphs
-    with long chains, where per-round cost stays O(E) but the round
-    count is poly-log in the component diameter instead of linear.
-
-    ``edges``: canonical undirected pairs (u > v, no self-loops,
-    distinct). Returns (_id, component) for every edge endpoint,
-    component = min id of the connected component.
-
-    Each round is two window-aggregate passes (one shuffle each):
-
-    - **large-star** attaches every neighbor larger than ``a`` to
-      ``min(Γ(a) ∪ {a})`` — halves long chains by pointer doubling;
-    - **small-star** re-orients to (u > v) and attaches each small
-      neighbor plus ``u`` itself to the neighborhood minimum.
-
-    At the fixpoint the edge set IS the answer: a star per component
-    centered on its minimum. The potential function in the paper
-    decreases monotonically, so an unchanged edge checksum means the
-    fixpoint, not an oscillation.
-    """
-    from pyspark.sql import Window
-
-    edges = edges.localCheckpoint(eager=True)
-    prev = None
-    converged = False
-    for _ in range(max_iter):
-        # large-star over the bidirectional view
-        bi = edges.select(F.col("u").alias("a"), F.col("v").alias("b")).unionByName(
-            edges.select(F.col("v").alias("a"), F.col("u").alias("b"))
-        )
-        m = F.least(F.col("a"), F.min("b").over(Window.partitionBy("a")))
-        ls = (
-            bi.withColumn("m", m)
-            .filter(F.col("b") > F.col("a"))
-            .select(F.col("b").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star on the (u > v)-oriented result
-        m2 = F.min("v").over(Window.partitionBy("u"))
-        sp = ls.withColumn("m", m2)
-        edges = (
-            sp.select(F.col("v").alias("x"), F.col("m"))
-            .unionByName(sp.select(F.col("u").alias("x"), F.col("m")))
-            .filter(F.col("x") != F.col("m"))
-            .select(F.greatest("x", "m").alias("u"), F.least("x", "m").alias("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        cur = _edge_checksum(edges, ("u", "v"))
-        if prev is not None and cur == prev:
-            converged = True
-            break
-        prev = cur
-    if not converged:
-        raise RuntimeError(
-            f"connected_components(method='star') did not reach the fixpoint "
-            f"within max_iter={max_iter} rounds; raise max_iter"
-        )
-    # star edges: (leaf u → center v); centers label themselves
-    return edges.select(F.col("u").alias("_id"), F.col("v").alias("component")).unionByName(
-        edges.select(F.col("v").alias("_id"), F.col("v").alias("component"))
-    ).distinct()
 
 
 class _PinLedger:
@@ -1184,7 +1013,6 @@ def connected_components(
     src_col: str = "doc_a",
     dst_col: str = "doc_b",
     max_iter: int = 50,
-    method: str = "label",
 ) -> DataFrame:
     """Connected components by min-label propagation: every vertex
     ends up labeled with the smallest ``id`` in its component — the
@@ -1218,31 +1046,7 @@ def connected_components(
     to three may remain pinned at convergence (the returned frame's
     own cache chain; the session's LRU store evicts them under
     pressure).
-
-    ``method="star"`` switches to large-star/small-star
-    (:func:`_cc_star_labels`, Kiveris et al.) — O(log²) rounds instead
-    of O(diameter), the right trade for long-chain graphs at extreme
-    scale; identical output contract (property-tested equal on random
-    graphs). Default stays min-label: near-dup components are
-    clique-ish (diameter 2-3), where the simpler per-round plan wins.
     """
-    if method not in ("label", "star"):
-        raise ValueError(f"method must be 'label' or 'star', got {method!r}")
-    if method == "star":
-        canon = (
-            edges.select(
-                F.greatest(F.col(src_col), F.col(dst_col)).alias("u"),
-                F.least(F.col(src_col), F.col(dst_col)).alias("v"),
-            )
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        labels = _cc_star_labels(canon, max_iter)
-        v = vertices.select(F.col(id_col).alias("_id"))
-        return v.join(labels, "_id", "left").select(
-            F.col("_id").alias(id_col),
-            F.coalesce(F.col("component"), F.col("_id")).alias("component"),
-        )
     e = edges.select(
         F.col(src_col).alias("_s"), F.col(dst_col).alias("_d")
     ).unionByName(
@@ -1332,11 +1136,11 @@ def connected_components(
         # returning mid-propagation labels would silently split real
         # components (duplicate "canonical" docs downstream) — fail
         # loudly instead; chains longer than max_iter need a bigger
-        # budget or the large-star/small-star formulation
+        # budget
         raise RuntimeError(
             f"connected_components did not reach the fixpoint within "
             f"max_iter={max_iter} rounds (component diameter exceeds the "
-            f"budget); raise max_iter or use an O(log^2)-round variant"
+            f"budget); raise max_iter"
         )
     v = vertices.select(F.col(id_col).alias("_id"))
     return (
@@ -1356,8 +1160,6 @@ def neardup_components(
     band_size: int = 3,
     k: int = 3,
     max_bucket_size: int | None = SCALE_MAX_BUCKET_SIZE,
-    salt_chunk: int | None = None,
-    cc_method: str = "label",
 ) -> DataFrame:
     """End-to-end near-dup grouping: MinHash-LSH candidates →
     exact-Jaccard verification → connected components over the
@@ -1370,19 +1172,17 @@ def neardup_components(
     with the skew guard ON by default (VERDICT r2 #2):
     ``max_bucket_size=SCALE_MAX_BUCKET_SIZE`` drops degenerate LSH
     buckets before pair expansion. Pass ``None`` for exact reference
-    semantics, or ``salt_chunk`` to keep hot buckets but spread their
-    expansion (:func:`_bucket_pairs_salted`). The Jaccard verify stage
-    here is the candidate-restricted path, which is always exact — no
-    posting-list expansion exists to cap.
+    semantics. The Jaccard verify stage here is the
+    candidate-restricted path, which is always exact — no posting-list
+    expansion exists to cap.
     """
     cand = minhash_lsh_candidates(
-        df, text_col, n_hashes, band_size, k,
-        max_bucket_size=max_bucket_size, salt_chunk=salt_chunk,
+        df, text_col, n_hashes, band_size, k, max_bucket_size=max_bucket_size
     )
     pairs = ngram_jaccard_pairs(
         df, text_col, k, threshold=threshold, candidates=cand
     ).select("doc_a", "doc_b")
-    return connected_components(pairs, df.select("doc_id"), method=cc_method)
+    return connected_components(pairs, df.select("doc_id"))
 
 
 def survivors_by_quality(
@@ -1491,11 +1291,10 @@ def allpairs_jaccard_join(
     )
     # prefix-filter candidates are NOT bounded by construction (a
     # boilerplate-heavy corpus at a low threshold emits a pair-stream-
-    # sized set) — never force-broadcast them; AQE picks broadcast at
-    # runtime whenever the actual set is small
+    # sized set) — the candidate path merge-pins them; AQE picks
+    # broadcast at runtime whenever the actual set is small
     return ngram_jaccard_pairs(
-        df, text_col, k, threshold=threshold, candidates=cand_lf,
-        broadcast_candidates=False,
+        df, text_col, k, threshold=threshold, candidates=cand_lf
     )
 
 
@@ -1769,48 +1568,16 @@ def decontaminate(
         .distinct()
     )
 
-    def _sets(df: DataFrame) -> DataFrame:
-        return (
-            word_shingles(df, text_col, k, distinct=False)
-            .select("doc_id", _h56(F.col("shingle")).alias("h"))
-            .groupBy("doc_id")
-            .agg(F.collect_set("h").alias("hset"))
-        )
+    def _sets(df: DataFrame, side: str) -> DataFrame:
+        ids = cand.select(F.col(side).alias("doc_id")).distinct()
+        return shingle_sets(df.join(ids, "doc_id", "left_semi"), text_col, k)
 
-    st = _sets(
-        train.join(
-            cand.select(F.col("train_id").alias("doc_id")).distinct(),
-            "doc_id",
-            "left_semi",
-        )
-    ).select(F.col("doc_id").alias("train_id"), F.col("hset").alias("sa"))
-    se = _sets(
-        eval_df.join(
-            cand.select(F.col("eval_id").alias("doc_id")).distinct(),
-            "doc_id",
-            "left_semi",
-        )
-    ).select(F.col("doc_id").alias("eval_id"), F.col("hset").alias("sb"))
-    out = (
-        cand.join(st, "train_id")
-        .join(se, "eval_id")
-        .select(
-            "train_id",
-            "eval_id",
-            F.size(F.array_intersect("sa", "sb")).alias("n_inter"),
-            F.size("sa").alias("n_a"),
-            F.size("sb").alias("n_b"),
-        )
-        .filter(F.col("n_inter") > 0)
-        .withColumn(
-            "jaccard",
-            F.col("n_inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= F.lit(threshold))
-        .select("train_id", "eval_id", "n_inter", "n_a", "n_b", "jaccard")
+    pairs = cand.select(
+        F.col("train_id").alias("doc_a"), F.col("eval_id").alias("doc_b")
     )
-    return out
+    return verify_jaccard(
+        pairs, _sets(train, "train_id"), _sets(eval_df, "eval_id"), threshold
+    ).withColumnsRenamed({"doc_a": "train_id", "doc_b": "eval_id"})
 
 
 def decontaminate_survivors(

@@ -24,8 +24,8 @@ Increment algorithm (:func:`dedup_increment`):
    old-old collision already existed in a previous run: banding is
    deterministic).
 2. exact-Jaccard-verify candidates from the stored shingle sets
-   (``array_intersect`` on a broadcast pair list — the same
-   candidate-restricted plan as :func:`..dedup.ngram_jaccard_pairs`).
+   (:func:`..dedup.verify_jaccard` on a broadcast pair list — the
+   verify step of :func:`..dedup.ngram_jaccard_pairs`).
 3. merge via the QUOTIENT graph: old endpoints contract to their
    prior component label, then connected components runs over (new
    ids ∪ touched labels) only — the fixpoint never revisits the old
@@ -47,24 +47,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stock_indicators_etl_spark.llmdata.dedup import (
+    _minhash_aggs,
+    _minhash_hashed_shingles,
     band_rows,
     connected_components,
     minhash_signatures,
-    word_shingles,
+    shingle_sets,
+    verify_jaccard,
 )
-from stock_indicators_etl_spark.llmdata.hashing import h56
-
-
-def _shingle_sets(
-    df: DataFrame, text_col: str, k: int
-) -> DataFrame:
-    """(doc_id, sh_set): each doc's distinct hashed shingles."""
-    return (
-        word_shingles(df, text_col, k, distinct=False)
-        .select("doc_id", h56(F.col("shingle")).alias("h"))
-        .groupBy("doc_id")
-        .agg(F.collect_set("h").alias("sh_set"))
-    )
 
 
 def _signatures_and_sets(
@@ -72,28 +62,18 @@ def _signatures_and_sets(
 ) -> DataFrame:
     """One scan + one shuffle for BOTH per-doc artifacts the index
     stores: the MinHash signature (mh_0..mh_{n-1}) and the distinct
-    shingle-hash set. The shared trick: h56 (the Jaccard-verify
-    convention, first 14 md5 hex digits) IS minhash's h1, so a single
-    md5 per shingle feeds the double-hashing mins and the
-    ``collect_set`` — fusing what :func:`..dedup.minhash_signatures`
-    + :func:`_shingle_sets` would compute in two scans (DESIGN §4.7,
-    hash once derive many). Bit-identical outputs to the unfused pair
-    (pinned in tests/test_dedup_index.py)."""
-    from stock_indicators_etl_spark.llmdata.dedup import MH_PRIME
-
-    sh = word_shingles(df, text_col, k, distinct=False)
-    md = F.md5(F.col("shingle"))
-    h1 = F.conv(F.substring(md, 1, 14), 16, 10).cast("long")
-    h2 = F.conv(F.substring(md, 17, 14), 16, 10).cast("long")
-    hashed = sh.select("doc_id", h1.alias("h1"), h2.alias("h2"))
-    aggs = [
-        F.min((F.col("h1") + F.lit(i) * F.col("h2")) % F.lit(MH_PRIME)).alias(
-            f"mh_{i}"
-        )
-        for i in range(n_hashes)
-    ]
-    aggs.append(F.collect_set("h1").alias("sh_set"))
-    return hashed.groupBy("doc_id").agg(*aggs)
+    shingle-hash set. The shared trick: minhash's h1 IS the
+    :func:`..dedup.shingle_sets` hash (h56), so a single md5 per
+    shingle feeds the double-hashing mins and the ``collect_set`` —
+    fusing what :func:`..dedup.minhash_signatures` +
+    :func:`..dedup.shingle_sets` would compute in two scans (DESIGN
+    §4.7, hash once derive many). Bit-identical outputs to the
+    unfused pair (pinned in tests/test_dedup_index.py)."""
+    return (
+        _minhash_hashed_shingles(df, text_col, k)
+        .groupBy("doc_id")
+        .agg(*_minhash_aggs(n_hashes), F.collect_set("h1").alias("sh_set"))
+    )
 
 
 def _index_exists(spark: SparkSession, index_path: str) -> bool:
@@ -125,35 +105,8 @@ def write_index_shard(
     band_rows(sig, n_hashes, band_size).write.mode(mode).parquet(
         index_path + "/bands"
     )
-    _shingle_sets(docs, text_col, k).write.mode(mode).parquet(
+    shingle_sets(docs, text_col, k).write.mode(mode).parquet(
         index_path + "/shingles"
-    )
-
-
-def _verify_pairs(
-    doc_sets: DataFrame, candidates: DataFrame, threshold: float
-) -> DataFrame:
-    """Exact Jaccard over stored shingle sets for the candidate pairs
-    (same plan as the candidate-restricted ngram_jaccard_pairs)."""
-    a = doc_sets.select(F.col("doc_id").alias("doc_a"), F.col("sh_set").alias("sa"))
-    b = doc_sets.select(F.col("doc_id").alias("doc_b"), F.col("sh_set").alias("sb"))
-    return (
-        a.join(F.broadcast(candidates), "doc_a")
-        .join(b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("sa", "sb")).alias("n_inter"),
-            F.size("sa").alias("n_a"),
-            F.size("sb").alias("n_b"),
-        )
-        .withColumn(
-            "jaccard",
-            F.col("n_inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= F.lit(threshold))
-        .select("doc_a", "doc_b")
     )
 
 
@@ -237,7 +190,9 @@ def dedup_increment(
         .distinct()
     )
     doc_sets = all_sets.join(F.broadcast(cand_docs), "doc_id", "left_semi")
-    edges = _verify_pairs(doc_sets, cand, threshold)
+    edges = verify_jaccard(F.broadcast(cand), doc_sets, doc_sets, threshold).select(
+        "doc_a", "doc_b"
+    )
 
     # quotient: contract old endpoints to their prior component label.
     # new_ids reads the PINNED per_doc frame, not new_docs: it is

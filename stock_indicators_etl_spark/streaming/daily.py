@@ -21,6 +21,8 @@ from __future__ import annotations
 import argparse
 import sys
 
+from pyspark.errors import AnalysisException
+
 from stock_indicators_etl_spark.config import IndicatorConfig
 from stock_indicators_etl_spark.operators.pipeline import generate_indicators
 from stock_indicators_etl_spark.session import get_spark
@@ -58,8 +60,11 @@ def run_indicators(args: argparse.Namespace) -> int:
     spark = get_spark(app_name="generate_indicators")
     try:
         bars = read_bars_day(spark, args.src, args.interval, args.execution_date)
-    except Exception:
-        # missing day → skip (reference behavior, data_indicators.py:37-39)
+    except AnalysisException as e:
+        # missing input → skip (reference behavior, data_indicators.py:37-39);
+        # anything else (a corrupt file, a bad schema) must fail the job
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         print(f"no input for {args.execution_date}; skipping")
         return 0
     out = generate_indicators(bars, IndicatorConfig(), date=args.execution_date)

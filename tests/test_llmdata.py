@@ -227,40 +227,6 @@ def test_ivf_topk_recall_and_scores(spark):
     assert approx.groupby("qid").size().max() <= 5
 
 
-def test_salted_bucket_pairs_equal_plain(spark):
-    from stock_indicators_etl_spark.llmdata.dedup import (
-        _bucket_pairs,
-        _bucket_pairs_salted,
-        minhash_lsh_candidates,
-    )
-
-    # synthetic hot bucket (17 ids) + small bucket + singleton
-    grouped = spark.createDataFrame(
-        pd.DataFrame(
-            {"ids": [list(range(100, 117)), [5, 3, 9], [42]]}
-        )
-    )
-    plain = {tuple(r) for r in _bucket_pairs(grouped).collect()}
-    for chunk in (3, 4, 16, 100):
-        salted = _bucket_pairs_salted(grouped, chunk=chunk).collect()
-        assert len(salted) == len(plain)  # no dup pairs within a bucket
-        assert {tuple(r) for r in salted} == plain
-
-    # end-to-end: salted LSH output identical to plain on real docs
-    docs = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": range(8),
-                "text": ["the quick brown fox jumps over the lazy dog"] * 4
-                + [f"unique text number {i} with different words entirely" for i in range(4)],
-            }
-        )
-    )
-    a = {tuple(r) for r in minhash_lsh_candidates(docs).collect()}
-    b = {tuple(r) for r in minhash_lsh_candidates(docs, salt_chunk=2).collect()}
-    assert a == b and len(a) >= 6  # the 4 identical docs pair up
-
-
 def test_skew_guards_bound_pair_counts(spark):
     """Planted hot shingle: without guards the pair count is quadratic
     in its doc frequency; max_doc_freq (Jaccard) and max_bucket_size
@@ -309,8 +275,7 @@ def test_skew_guards_bound_pair_counts(spark):
 def test_composed_neardup_caps_and_salting(spark):
     """VERDICT r2 #2: the COMPOSED pipeline ships with the bucket cap
     on by default and still groups real near-dups; an explicit tiny
-    cap bounds a planted hot bucket through the composed entry point;
-    salting changes nothing about the output."""
+    cap bounds a planted hot bucket through the composed entry point."""
     from stock_indicators_etl_spark.llmdata.dedup import neardup_components
 
     hot = spark.createDataFrame(
@@ -332,13 +297,6 @@ def test_composed_neardup_caps_and_salting(spark):
         for r in neardup_components(hot, max_bucket_size=10).collect()
     }
     assert all(capped[i] == i for i in range(20))
-    # salting spreads the hot bucket's expansion but must not change
-    # the final grouping
-    salted = {
-        r.doc_id: r.component
-        for r in neardup_components(hot, salt_chunk=4).collect()
-    }
-    assert salted == got
 
 
 def test_connected_components_string_ids(spark):
@@ -586,67 +544,56 @@ def test_connected_components_raises_on_unconverged(spark):
         connected_components(edges, verts, max_iter=1)
 
 
-def test_cc_star_matches_label_on_random_graphs(spark):
-    """VERDICT r2 #8: large-star/small-star produces the identical
-    (vertex -> min-of-component) mapping as min-label propagation on
-    random graphs of several densities, including string ids."""
+def _union_find_components(ids, pairs):
+    """Pure-Python oracle: vertex -> min id of its connected component."""
+    parent = {i: i for i in ids}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {i: find(i) for i in ids}
+
+
+def test_cc_label_matches_union_find_on_random_graphs(spark):
+    """Min-label propagation equals a pure-Python union-find on random
+    graphs of several densities (self-loops and repeated edges
+    included), and on string ids."""
     import numpy as np
 
     from stock_indicators_etl_spark.llmdata.dedup import connected_components
 
     rng = np.random.default_rng(5)
     for n, m in ((30, 15), (30, 40), (50, 120)):
-        a = rng.integers(0, n, m)
-        b = rng.integers(0, n, m)
-        edges = spark.createDataFrame(
-            pd.DataFrame({"doc_a": a.tolist(), "doc_b": b.tolist()})
-        )
+        a = rng.integers(0, n, m).tolist()
+        b = rng.integers(0, n, m).tolist()
+        edges = spark.createDataFrame(pd.DataFrame({"doc_a": a, "doc_b": b}))
         verts = spark.createDataFrame(pd.DataFrame({"doc_id": list(range(n))}))
-        lab = {
+        got = {
             r.doc_id: r.component
-            for r in connected_components(edges, verts, method="label").collect()
+            for r in connected_components(edges, verts).collect()
         }
-        star = {
-            r.doc_id: r.component
-            for r in connected_components(edges, verts, method="star").collect()
-        }
-        assert star == lab
-    # string ids through the star path (greatest/least on strings)
-    ids = [f"d-{i:02d}" for i in range(8)]
-    edges = spark.createDataFrame(pd.DataFrame({"doc_a": ids[:-1], "doc_b": ids[1:]}))
+        assert got == _union_find_components(range(n), zip(a, b))
+    # string ids: a chain, a random graph over the same names, a singleton
+    ids = [f"d-{i:02d}" for i in range(12)]
+    pairs = list(zip(ids[:4], ids[1:5]))
+    pairs += [
+        (ids[i], ids[j]) for i, j in rng.integers(5, len(ids), (6, 2)).tolist()
+    ]
+    edges = spark.createDataFrame(pd.DataFrame(pairs, columns=["doc_a", "doc_b"]))
     verts = spark.createDataFrame(pd.DataFrame({"doc_id": ids + ["solo"]}))
     got = {
         r.doc_id: r.component
-        for r in connected_components(edges, verts, method="star").collect()
+        for r in connected_components(edges, verts).collect()
     }
-    assert got == {**{i: "d-00" for i in ids}, "solo": "solo"}
-
-
-def test_cc_star_chain_converges_in_log_rounds(spark):
-    """A planted 512-node chain has diameter 511: min-label needs one
-    round per hop, large-star/small-star must land within a log^2-ish
-    budget (12 rounds here) — the scale rationale for method='star'."""
-    from stock_indicators_etl_spark.llmdata.dedup import connected_components
-
-    n = 512
-    edges = spark.createDataFrame(
-        pd.DataFrame({"doc_a": list(range(n - 1)), "doc_b": list(range(1, n))})
-    )
-    verts = spark.createDataFrame(pd.DataFrame({"doc_id": list(range(n))}))
-    got = connected_components(edges, verts, max_iter=12, method="star")
-    comps = {r.doc_id: r.component for r in got.collect()}
-    assert comps == {i: 0 for i in range(n)}
-
-
-def test_cc_star_rejects_unknown_method(spark):
-    import pytest as _pytest
-
-    from stock_indicators_etl_spark.llmdata.dedup import connected_components
-
-    edges = spark.createDataFrame(pd.DataFrame({"doc_a": [1], "doc_b": [2]}))
-    verts = spark.createDataFrame(pd.DataFrame({"doc_id": [1, 2]}))
-    with _pytest.raises(ValueError, match="method"):
-        connected_components(edges, verts, method="nope")
+    assert got == _union_find_components(ids + ["solo"], pairs)
+    assert got["d-04"] == "d-00" and got["solo"] == "solo"
 
 
 def test_ivf_refinement_improves_cell_tightness(spark):

@@ -157,8 +157,8 @@ WHERE cum >= greatest(1, (q * nn + 999999) // 1000000)
 
 
 class TestBenchStampHygiene:
-    def _stamp(self, path, round_no, idx, git_rev, queries):
-        d = {"queries": queries}
+    def _stamp(self, path, round_no, idx, git_rev, queries, cpus="4"):
+        d = {"queries": queries, "cpus": cpus}
         if git_rev is not None:
             d["git_rev"] = git_rev
         (path / f"BENCHFULL_r{round_no:02d}_2026{idx:04d}Z.json").write_text(
@@ -168,22 +168,25 @@ class TestBenchStampHygiene:
     def test_prior_stamps_filtered_by_revision(self, tmp_path):
         """ADVICE r10: a stamp from a superseded mid-round revision
         (e.g. pre-order-fix bpe_encode) must not contribute to the
-        'noise-free floor' — only same-revision stamps fold in, and
-        pre-r11 stamps without a git_rev field are excluded."""
+        'noise-free floor' — only same-revision stamps at the same
+        core count fold in, and pre-r11 stamps without a git_rev field
+        are excluded."""
         import bench
 
         self._stamp(tmp_path, 11, 1, "aaa", {"q1": 1.0})
         self._stamp(tmp_path, 11, 2, "bbb", {"q1": 0.1})  # other rev
         self._stamp(tmp_path, 11, 3, None, {"q1": 0.2})  # legacy format
         self._stamp(tmp_path, 11, 4, "aaa", {"q1": 0.9})
-        got = bench._prior_stamp_timings(tmp_path, 11, "aaa")
+        # same revision, other core count: a scaling run, not a floor
+        self._stamp(tmp_path, 11, 5, "aaa", {"q1": 0.05}, cpus="8")
+        got = bench._prior_stamp_timings(tmp_path, 11, "aaa", "4")
         assert got == {"q1": [1.0, 0.9]}
 
     def test_no_rev_folds_nothing(self, tmp_path):
         import bench
 
         self._stamp(tmp_path, 11, 1, "aaa", {"q1": 1.0})
-        assert bench._prior_stamp_timings(tmp_path, 11, "") == {}
+        assert bench._prior_stamp_timings(tmp_path, 11, "", "4") == {}
 
     def test_current_file_is_rev_stamped(self):
         """run() writes git_rev into the BENCHFULL dict (structural:

@@ -19,15 +19,10 @@ import pytest
 from stock_indicators_etl_spark.llmdata.dedup import (
     SCALE_MAX_BUCKET_SIZE,
     SCALE_MAX_DOC_FREQ,
-    _bucket_pairs,
-    _bucket_pairs_salted,
-    _salted_chunk_rows,
     minhash_lsh_candidates,
     neardup_components,
     ngram_jaccard_pairs,
 )
-
-from pyspark.sql import functions as F
 
 
 def _boilerplate_corpus(spark, n_total=300, hot_frac=0.3, n_planted=4):
@@ -93,46 +88,6 @@ def test_hot_lsh_bucket_dropped_by_composed_default(spark):
     # the genuine sub-cap pair still groups
     assert all(comp[i] == i for i in range(n_sink))
     assert comp[90_001] == comp[90_000] == 90_000
-
-
-def test_salt_chunk_spreads_task_sizes(spark):
-    """salt_chunk keeps hot buckets but bounds per-row work: a 40-id
-    bucket at chunk=8 becomes 15 rows each carrying <= 8 ids per side
-    (<= 64 pair-work per row vs 780 in the single unsalted row), with
-    identical pair output."""
-    grouped = spark.createDataFrame(
-        pd.DataFrame({"key": ["hot"], "ids": [list(range(40))]})
-    )
-    layout = _salted_chunk_rows(grouped, chunk=8).select(
-        F.size("a").alias("na"), F.size("b").alias("nb")
-    )
-    sizes = layout.collect()
-    # ceil(40/8)=5 chunks -> 5*6/2 = 15 chunk-pair rows
-    assert len(sizes) == 15
-    assert max(max(r.na, r.nb) for r in sizes) <= 8
-    salted = {
-        (r.doc_a, r.doc_b)
-        for r in _bucket_pairs_salted(grouped, chunk=8).collect()
-    }
-    plain = {(r.doc_a, r.doc_b) for r in _bucket_pairs(grouped).collect()}
-    assert salted == plain and len(plain) == 40 * 39 // 2
-
-
-def test_salted_composed_pipeline_keeps_hot_bucket_groups(spark):
-    """salt_chunk through the composed entry point: the hot bucket is
-    KEPT (unlike max_bucket_size) and its docs still collapse to one
-    component, so salting is the right guard when the duplicates are
-    real rather than boilerplate."""
-    n_hot = 60
-    rows = [(i, "a real duplicated press release syndicated everywhere verbatim") for i in range(n_hot)]
-    rows += [(1_000 + i, f"distinct article {i} body {i * 7} tail {i * 3}") for i in range(5)]
-    docs = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-    comp = {
-        r.doc_id: r.component
-        for r in neardup_components(docs, salt_chunk=16, max_bucket_size=None).collect()
-    }
-    assert all(comp[i] == 0 for i in range(n_hot))
-    assert all(comp[1_000 + i] == 1_000 + i for i in range(5))
 
 
 def test_link_prediction_hub_vertex_bounded(spark):

@@ -953,3 +953,37 @@ def test_streaming_ann_serving_matches_batch(spark, tmp_path):
         assert got == want
     finally:
         index.unpersist()
+
+
+def test_indicators_skips_only_missing_input(spark, tmp_path, monkeypatch):
+    """A missing archive is the reference's clean no-op (exit 0, no
+    output); a day partition holding a non-parquet file is a broken
+    input and must fail the job instead of reporting 'no input'."""
+    import os
+
+    import stock_indicators_etl_spark.streaming.daily as daily
+    from stock_indicators_etl_spark.sources.io import write_bars_day
+    from stock_indicators_etl_spark.sources.yahoo import download_bars, synthetic_fetch
+
+    monkeypatch.setattr(daily, "get_spark", lambda **kw: spark)
+    base, dst = tmp_path / "bars", tmp_path / "feat"
+    argv = ["indicators", "--execution_date", "2024-01-02", "--interval", "1m",
+            "--src", str(base), "--dst", str(dst)]
+    assert daily.main(argv) == 0
+    assert not dst.exists()
+
+    bars = download_bars(spark, ["AAPL"], "2024-01-02", "1m", fetch_fn=synthetic_fetch)
+    write_bars_day(bars, str(base), "1m", "2024-01-02")
+    parts = [
+        os.path.join(root, f)
+        for root, _, files in os.walk(base)
+        for f in files
+        if f.endswith(".parquet")
+    ]
+    assert parts
+    for p in parts:
+        with open(p, "w") as fh:
+            fh.write("not parquet")
+    with pytest.raises(Exception, match="not a Parquet file"):
+        daily.main(argv)
+    assert not dst.exists()
